@@ -14,9 +14,9 @@ Reference semantics reproduced:
 - per-partition lineage + metrics rows (north_rule): every save records
   (run_id, n_rows, n_reused, ts) to <path>/_metrics.
 
-Layout — generational append + two bucket partition levels::
+Layout — generational append + one hash-bucket partition level::
 
-    <path>/data/gen=<g>/bucket=<b>/hb=<h>/part-*.parquet
+    <path>/data/gen=<g>/hb=<h>/part-*.parquet
 
 Each ``save`` writes ONLY its own rows as the next generation ``g``,
 so save cost is O(batch), not O(store): a steady-state incremental/
@@ -26,38 +26,32 @@ generation per key — and periodically folded back into one generation
 by ``compact()`` (auto-triggered every ``compact_every`` saves;
 amortized O(store / compact_every) per save).
 
-Every row also carries two explicit generation columns (v2 store
-schema): ``gen0``, the generation this (key, hash) pair was FIRST
-written in, and ``genl``, the generation it was LAST written in. The
-partition-dir ``gen=`` number orders a row only until compaction
-rewrites it into a new directory; the data columns survive that
-rewrite. The two readers need DIFFERENT orderings — ``load()``
-resolves latest-per-key by ``genl`` while ``probe_hashes`` attributes
-first holders by ``gen0`` — and one column cannot serve both: a key
-that returns to an earlier hash (K→A, K→B, K→A) must read A from the
-cache (last write) while the probe still credits A's gen-0 holder.
+Every row also carries two explicit generation columns: ``gen0``, the
+generation this (key, hash) pair was FIRST written in, and ``genl``,
+the generation it was LAST written in. The partition-dir ``gen=``
+number orders a row only until compaction rewrites it into a new
+directory; the data columns survive that rewrite. The two readers
+need DIFFERENT orderings — ``load()`` resolves latest-per-key by
+``genl`` while ``probe_hashes`` attributes first holders by ``gen0``
+— and one column cannot serve both: a key that returns to an earlier
+hash (K→A, K→B, K→A) must read A from the cache (last write) while
+the probe still credits A's gen-0 holder.
 ``compact()`` keeps ONE row per (key, hash) — min ``gen0``, max
 ``genl`` — rather than one per key: a hash superseded by an in-place
 rewrite remains in the store, preserving the probe's documented
 ever-seen contract (store size is O(live keys + superseded hashes),
-not O(all generations)). Legacy stores are handled at two levels:
-files missing the gen columns read correctly (both default to the
-partition ``gen``, exact for every save-produced row) and are folded
-to the current form by their next compaction; generations in the
-older ``gen=/bucket=`` LAYOUT (no hash-bucket level — Spark refuses
-mixed partition depths, and hb pruning would silently drop them) are
-rewritten into one current-layout generation at store OPEN, preserving
-write order in the gen columns. The store is per-ALGORITHM like the
+not O(all generations)). The store is per-ALGORITHM like the
 reference's ``file_hashes_{algo}.cache``: a ``_algo=<name>`` marker is
 stamped on first save and a mismatched open raises.
 
-``bucket = pmod(xxhash64(repo,path,commit), n_buckets)`` co-partitions
-the KEY side (cache joins, compaction merges); ``hb = pmod(crc32(hash),
-n_hash_buckets)`` partitions the CONTENT side so ``probe_hashes`` can
-prune a duplicate probe to the batch's own hash buckets instead of
-scanning the store (read-side O(batch), matching the write side). Both
-map 1:1 onto Iceberg bucket-transform partition spec fields at
-deployment scale.
+``hb = pmod(crc32(hash), n_hash_buckets)`` partitions the CONTENT side
+so ``probe_hashes`` can prune a duplicate probe to the batch's own hash
+buckets instead of scanning the store (read-side O(batch), matching the
+write side); it maps 1:1 onto an Iceberg bucket-transform partition
+spec field at deployment scale. The cache join reads the whole store,
+so no key-side partition level exists. Stores written with the older
+two-level ``gen=/bucket=`` layout are rejected at open: the store is a
+cache, and deleting it costs one cold run.
 
 All driver-side filesystem ops (generation listing, atomic
 rename-publish, cleanup) go through the Hadoop FileSystem API
@@ -92,27 +86,16 @@ CACHE_KEY = ["repo", "path", "commit"]
 VALUE_COLS = ["hash", "minhash", "simhash", "n_shingles"]
 CACHE_COLS = CACHE_KEY + VALUE_COLS
 
-# Pinned store read schema (v2 data columns + the three partition
-# columns). Inference reads ONE parquet footer, so a store mixing
-# pre-hb files (no gen0/genl — possible after a crash between
-# compact()'s publish rename and its cleanup of older generations)
-# could silently lose the gen columns for EVERY row, breaking
-# probe_hashes' documented cross-compaction invariance and making
-# load()'s latest-per-key resolution tie nondeterministically. With
-# the schema pinned, such files surface gen0/genl as nulls and the
-# coalesce-to-partition-gen fallback in _read_with_gens applies per
-# ROW, which is the correct semantics. The hash column's type follows
-# the algorithm (hash_spark_type): crc32/xxhash64 stores hold longs —
-# pinning "string" over them would fail every read.
-def store_read_schema(hash_type: str = "string") -> str:
+# Pinned store read schema (data columns + the two partition columns):
+# spares every read the parquet footer inference. The hash column's
+# type follows the algorithm (hash_spark_type): crc32/xxhash64 stores
+# hold longs — pinning "string" over them would fail every read.
+def store_read_schema(hash_type: str) -> str:
     return (
         f"repo string, path string, commit string, hash {hash_type}, "
         "minhash array<int>, simhash long, n_shingles int, "
-        "gen0 int, genl int, gen int, bucket int, hb int"
+        "gen0 int, genl int, gen int, hb int"
     )
-
-
-STORE_READ_SCHEMA = store_read_schema()
 
 
 class HadoopFS:
@@ -203,14 +186,12 @@ class SignatureStore:
         spark: SparkSession,
         path: str,
         config: DedupConfig,
-        n_buckets: int = 16,
         compact_every: int = 16,
         n_hash_buckets: int = 64,
     ):
         self.spark = spark
         self.path = path.rstrip("/")
         self.config = config
-        self.n_buckets = n_buckets
         self.compact_every = compact_every
         self.n_hash_buckets = n_hash_buckets
         self.fs = HadoopFS(spark, self.path)
@@ -218,7 +199,7 @@ class SignatureStore:
 
         self._hash_type = hash_spark_type(config.algorithm)
         self._read_schema = store_read_schema(self._hash_type)
-        self._checked = False  # algo marker + legacy migration, once
+        self._checked = False  # algo marker + layout check, once
 
     @property
     def _data_dir(self) -> str:
@@ -231,11 +212,9 @@ class SignatureStore:
         (/root/reference/src/file_cache.rs:119-121) — a marker dir
         ``_algo=<name>`` records the writer's algorithm and a mismatch
         raises instead of failing deep in a parquet type error;
-        (b) legacy pre-hb generations (round-2 layout ``gen=/bucket=``,
-        no hash-bucket level) are migrated to the current layout —
-        Spark's partition discovery refuses MIXED depths outright, and
-        a pure-legacy store would silently defeat probe_hashes' hb
-        pruning (hb reads as null → every probe filtered out)."""
+        (b) a generation in the older two-level ``gen=/bucket=`` layout
+        raises too, before Spark's partition discovery meets the extra
+        level (mixed depths fail deep inside the read)."""
         if self._checked:
             return
         markers = [e for e in self.fs.listdir(self.path) if e.startswith("_algo=")]
@@ -247,62 +226,18 @@ class SignatureStore:
                 "per-algorithm (reference parity: file_hashes_{algo}.cache) — "
                 "use a separate cache_path per algorithm"
             )
-        self._migrate_legacy_gens()
+        for g in self._list_gens():
+            gdir = f"{self._data_dir}/gen={g}"
+            if any(e.startswith("bucket=") for e in self.fs.listdir(gdir)):
+                raise ValueError(
+                    f"signature store at {self.path!r} uses the old two-level "
+                    f"gen=/bucket= layout (gen={g}), which is no longer read; "
+                    "the store is a cache — delete it and the next run rebuilds it"
+                )
         self._checked = True
 
     def _mark_algo(self) -> None:
         self.fs.mkdirs(f"{self.path}/_algo={self.config.algorithm}")
-
-    def _legacy_gens(self) -> list[int]:
-        """Generations in the round-2 layout (``bucket=`` dirs with
-        parquet files directly inside — no ``hb=`` level)."""
-        out = []
-        for g in self._list_gens():
-            gdir = f"{self._data_dir}/gen={g}"
-            buckets = [e for e in self.fs.listdir(gdir) if e.startswith("bucket=")]
-            if buckets and not any(
-                e.startswith("hb=") for e in self.fs.listdir(f"{gdir}/{buckets[0]}")
-            ):
-                out.append(g)
-        return out
-
-    def _migrate_legacy_gens(self) -> None:
-        """Rewrite legacy generations into the current layout as ONE new
-        generation, preserving each row's original write order in the
-        gen0/genl data columns. Same publish protocol as save/compact:
-        stage → atomic rename → delete sources; a crash before the
-        deletes leaves a mixed store that the next open re-migrates
-        (re-published rows are value-identical — min/max/max_by
-        resolution is unaffected by the redundancy). Single-writer
-        assumption as everywhere in the store."""
-        legacy = self._legacy_gens()
-        if not legacy:
-            return
-        all_gens = self._list_gens()
-        legacy_schema = (
-            f"repo string, path string, commit string, hash {self._hash_type}, "
-            "minhash array<int>, simhash long, n_shingles int, bucket int"
-        )
-        parts = []
-        for g in legacy:
-            parts.append(
-                self.spark.read.schema(legacy_schema)
-                .parquet(f"{self._data_dir}/gen={g}")
-                .select(*CACHE_COLS)
-                .withColumn("gen0", F.lit(g))
-                .withColumn("genl", F.lit(g))
-            )
-        rows = parts[0]
-        for p in parts[1:]:
-            rows = rows.unionByName(p)
-        staged = f"{self.path}/_staged_{uuid.uuid4().hex}"
-        self._writer(rows).parquet(staged)
-        self.fs.rename(staged, f"{self._data_dir}/gen={all_gens[-1] + 1}")  # atomic
-        for g in legacy:
-            self.fs.delete(f"{self._data_dir}/gen={g}")
-
-    def _bucket(self) -> Column:
-        return F.pmod(F.xxhash64(*CACHE_KEY), F.lit(self.n_buckets))
 
     def _hb(self) -> Column:
         """Hash-bucket partition column: crc32 is chosen over xxhash64
@@ -327,11 +262,10 @@ class SignatureStore:
         is read); sized for ~1M distinct hashes per file at the
         default 1% fpp."""
         return (
-            df.withColumn("bucket", self._bucket())
-            .withColumn("hb", self._hb())
+            df.withColumn("hb", self._hb())
             .write.option("parquet.bloom.filter.enabled#hash", "true")
             .option("parquet.bloom.filter.expected.ndv#hash", "1000000")
-            .partitionBy("bucket", "hb")
+            .partitionBy("hb")
         )
 
     def _list_gens(self) -> list[int]:
@@ -345,26 +279,14 @@ class SignatureStore:
         self._ensure_open()
         return self._list_gens()
 
-    def _read_with_gens(self) -> DataFrame:
-        """Raw store rows with the two write-order columns resolved:
-        ``_g0`` (first write — probe attribution order) and ``_gl``
-        (last write — cache resolution order). v2 rows carry them as
-        data columns that survive compaction; v1 legacy rows fall back
-        to the partition ``gen``, exact because v1 rows never outlived
-        a compaction rewrite. The read schema is PINNED
-        (STORE_READ_SCHEMA): inference samples one footer, so a mixed
-        v1/v2 store would otherwise drop the gen columns for every row
-        whenever a v1 footer won — pinning makes the fallback per-ROW
-        (v1 rows read gen0/genl as null), which is the semantics the
-        coalesce encodes."""
-        df = self.spark.read.schema(self._read_schema).parquet(self._data_dir)
-        return df.withColumn(
-            "_g0", F.coalesce(F.col("gen0"), F.col("gen"))
-        ).withColumn("_gl", F.coalesce(F.col("genl"), F.col("gen")))
+    def _read(self) -> DataFrame:
+        """Raw store rows: data columns, the gen0/genl write-order
+        columns and the gen/hb partition columns."""
+        return self.spark.read.schema(self._read_schema).parquet(self._data_dir)
 
     def load(self) -> DataFrame | None:
         """Latest-write-per-key view of the store (the MERGE INTO read
-        side), resolved by ``_gl``. A never-compacted single-generation
+        side), resolved by ``genl``. A never-compacted single-generation
         store (gens == [0]) skips the resolution shuffle — keys are
         unique by construction; a compacted store may hold several
         (key, hash) history rows per key (see ``compact``) and always
@@ -372,10 +294,10 @@ class SignatureStore:
         gens = self.generations()
         if not gens:
             return None
-        df = self._read_with_gens()
+        df = self._read()
         if gens == [0]:
             return df.select(*CACHE_COLS)
-        latest = F.max_by(F.struct(*[F.col(c) for c in VALUE_COLS]), F.col("_gl"))
+        latest = F.max_by(F.struct(*[F.col(c) for c in VALUE_COLS]), F.col("genl"))
         return (
             df.groupBy(*CACHE_KEY)
             .agg(latest.alias("_v"))
@@ -473,17 +395,17 @@ class SignatureStore:
         gens = self.generations()
         if len(gens) <= 1:
             return
-        rows = self._read_with_gens()
+        rows = self._read()
         vals = F.max_by(
             F.struct(*[F.col(c) for c in ("minhash", "simhash", "n_shingles")]),
-            F.col("_gl"),
+            F.col("genl"),
         )
         compacted = (
             rows.groupBy(*CACHE_KEY, "hash")
             .agg(
                 vals.alias("_v"),
-                F.min("_g0").alias("gen0"),
-                F.max("_gl").alias("genl"),
+                F.min("gen0").alias("gen0"),
+                F.max("genl").alias("genl"),
             )
             .select(
                 *CACHE_KEY,
@@ -552,7 +474,7 @@ class SignatureStore:
         hashes = [h for h in hashes if h is not None]
         if not hashes:
             return None
-        df = self._read_with_gens()
+        df = self._read()
         if len(hashes) <= max_inline:
             hbs = sorted({self._hb_of(h) for h in hashes})
             df = df.filter(F.col("hb").isin(hbs)).filter(F.col("hash").isin(list(hashes)))
@@ -562,7 +484,7 @@ class SignatureStore:
             ).dropDuplicates(["hash"])
             df = df.join(probe, "hash", "left_semi")
         first = F.min_by(
-            F.struct("repo", "path"), F.struct(F.col("_g0"), F.col("repo"), F.col("path"))
+            F.struct("repo", "path"), F.struct(F.col("gen0"), F.col("repo"), F.col("path"))
         )
         return (
             df.groupBy("hash")

@@ -678,6 +678,8 @@ def _block_frames(d: bytes, i: int, hi: int) -> list[tuple[int, int]]:
         raise AudioDecodeError("laced block missing frame count")
     n_frames = d[i] + 1
     i += 1
+    if n_frames == 1:  # a lace of one frame stores no sizes
+        return [(i, hi)]
     sizes: list[int] = []
     if lace == 0x02:  # Xiph: 255-run sums for the first n-1 frames
         for _ in range(n_frames - 1):

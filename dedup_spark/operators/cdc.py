@@ -72,7 +72,8 @@ def cdc_near_dup_pairs(
     Jaccard ≥ threshold — offset-shift-tolerant containment dedup.
     ``max_doc_freq`` is the standard hot-key cap (a chunk present in
     d docs emits C(d,2) join rows; dropped keys are counted, never
-    silent — see set_jaccard_pairs)."""
+    silent — see set_jaccard_pairs). Rows are unordered; callers that
+    need an order sort."""
     from dedup_spark.operators.similarity import set_jaccard_pairs
 
     exploded = (
@@ -87,4 +88,4 @@ def cdc_near_dup_pairs(
         threshold,
         max_entity_freq=max_doc_freq,
         shared_col="n_shared",
-    ).orderBy("id_a", "id_b")
+    )

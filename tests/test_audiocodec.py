@@ -604,6 +604,17 @@ def test_mka_round_trips_all_codecs_and_lacings():
     assert (r, tok) == (RATE, "pcm") and len(y) == len(x2)
 
 
+def test_mka_ebml_lace_of_one_frame_is_one_frame():
+    """An EBML-laced block whose lace-count byte is 0 holds one frame
+    and no lace sizes: the whole body after the count byte is that
+    frame, even when its first byte would parse as a size vint."""
+    from dedup_spark.functions.audiocodec import _block_frames
+
+    body = b"\x82" + bytes(5)
+    block = b"\x00\x00\x06\x00" + body  # timestamp, flags=EBML, count 0
+    assert _block_frames(block, 0, len(block)) == [(4, len(block))]
+
+
 def test_mka_stereo_downmixes():
     from dedup_spark.functions.audiocodec import decode_mka, encode_mka
 

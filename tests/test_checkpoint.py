@@ -6,6 +6,8 @@ re-uses a batch-A key with changed content and must be recomputed
 /root/reference/src/file_cache.rs:43-66,307-332).
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -272,7 +274,7 @@ def test_probe_hashes_pruned_and_flat(spark, cache_dir):
     assert scanned == [2] * 8  # flat while the store grew 20 -> 160 rows
 
     # the ACTUAL probe plan prunes too — the pinned read schema
-    # (STORE_READ_SCHEMA) must not defeat Hive partition pruning
+    # (store_read_schema) must not defeat Hive partition pruning
     real = store.probe_hashes(probe_set)
     real.collect()
     plan = real._jdf.queryExecution().executedPlan().toString()
@@ -363,7 +365,7 @@ def test_store_model_random_ops(spark, cache_dir):
 
     rng = random.Random(0xC0FFEE)
     store = SignatureStore(
-        spark, cache_dir, RECALL_CONFIG, compact_every=99, n_buckets=4, n_hash_buckets=8
+        spark, cache_dir, RECALL_CONFIG, compact_every=99, n_hash_buckets=8
     )
     latest: dict = {}   # key -> hash
     first: dict = {}    # hash -> (gen, repo, path), min wins
@@ -399,58 +401,6 @@ def test_store_model_random_ops(spark, cache_dir):
         )
 
 
-def test_mixed_v1_v2_store_reads_gen_columns_per_row(spark, cache_dir):
-    """Regression for the pinned read schema: parquet schema inference
-    samples ONE footer, so a store mixing v1 files (no gen0/genl data
-    columns — the state a crash between compact()'s publish and its
-    legacy-gen cleanup leaves behind) and v2 files could silently drop
-    the gen columns for EVERY row whenever a v1 footer won the sample.
-    With STORE_READ_SCHEMA pinned, v1 rows surface gen0/genl as nulls
-    and fall back to the partition gen per ROW, so load()'s
-    latest-per-key and probe_hashes' first-holder answers hold."""
-    from dedup_spark.checkpoint import SignatureStore
-
-    cfg = RECALL_CONFIG.with_(cache_path=cache_dir)
-    store = SignatureStore(spark, cache_dir, cfg)
-
-    # v1 generation written directly: same partition layout, NO gen cols
-    v1 = spark.createDataFrame(
-        [("r", "a.py", "c", "H_A", [1], 1, 1), ("r", "b.py", "c", "H_B", [2], 2, 1)],
-        SIG_SCHEMA,
-    )
-    (
-        v1.withColumn("bucket", store._bucket())
-        .withColumn("hb", store._hb())
-        .write.partitionBy("bucket", "hb")
-        .parquet(f"{cache_dir}/data/gen=0")
-    )
-
-    # v2 generation via save(): a.py rewritten in place to a new hash
-    store.save(
-        spark.createDataFrame([("r", "a.py", "c", "H_A2", [9], 9, 1)], SIG_SCHEMA)
-    )
-    assert store.generations() == [0, 1]
-
-    def check():
-        resolved = {r["path"]: r["hash"] for r in store.load().collect()}
-        assert resolved == {"a.py": "H_A2", "b.py": "H_B"}
-        probed = {
-            r["hash"]: (r["first_repo"], r["first_path"])
-            for r in store.probe_hashes(["H_A", "H_A2", "H_B"]).collect()
-        }
-        # ever-seen: the superseded H_A stays probeable, credited to gen 0
-        assert probed == {
-            "H_A": ("r", "a.py"),
-            "H_A2": ("r", "a.py"),
-            "H_B": ("r", "b.py"),
-        }
-
-    check()
-    store.compact()  # migrates the v1 rows to v2 wholesale
-    assert store.generations() == [2]
-    check()
-
-
 def test_long_hash_algorithm_store_roundtrip(spark, cache_dir):
     """crc32/xxhash64 hashes are LONGs; the store's pinned read schema
     must follow the algorithm (regression: a store written by
@@ -484,77 +434,67 @@ def test_long_hash_algorithm_store_roundtrip(spark, cache_dir):
     assert probed2 == probed
 
 
-def test_legacy_layout_store_migrates_on_open(spark, cache_dir):
-    """Round-2 stores were partitioned ``gen=/bucket=`` (no hb level).
-    Spark's partition discovery refuses mixed depths, and the hb prune
-    would silently drop every legacy row from probes — so opening a
-    store migrates legacy generations into the current layout,
-    preserving write order in the gen0/genl data columns."""
-    from dedup_spark.checkpoint import SignatureStore
-
-    cfg = RECALL_CONFIG.with_(cache_path=cache_dir)
-    s0 = SignatureStore(spark, cache_dir, cfg)
-    legacy = [
-        (0, [("r", "a.py", "c", "H_A", [1], 1, 1)]),
-        (1, [("r", "b.py", "c", "H_B", [2], 2, 1), ("r", "a.py", "c", "H_A2", [9], 9, 1)]),
-    ]
-    for g, rows in legacy:
-        (
-            spark.createDataFrame(rows, SIG_SCHEMA)
-            .withColumn("bucket", s0._bucket())
-            .write.partitionBy("bucket")
-            .parquet(f"{cache_dir}/data/gen={g}")
-        )
-
-    store = SignatureStore(spark, cache_dir, cfg)
-    assert store.generations() == [2]  # one migrated generation
-    got = {r["path"]: r["hash"] for r in store.load().collect()}
-    assert got == {"a.py": "H_A2", "b.py": "H_B"}  # latest write wins
-    probed = {
-        r["hash"]: (r["first_repo"], r["first_path"])
-        for r in store.probe_hashes(["H_A", "H_A2", "H_B"]).collect()
-    }
-    assert probed == {
-        "H_A": ("r", "a.py"),
-        "H_A2": ("r", "a.py"),
-        "H_B": ("r", "b.py"),
-    }
-
-
-def test_mixed_depth_store_recovers_on_open(spark, cache_dir):
-    """Crash window: a legacy-layout generation next to a current-layout
-    one (an interrupted migration/compaction cleanup) makes the whole
-    data dir unreadable by partition discovery
-    (CONFLICTING_PARTITION_COLUMN_NAMES) — open must re-migrate the
-    legacy dirs instead of leaving the store bricked."""
-    from pyspark.sql import functions as F
+def test_save_writes_one_partition_level(spark, cache_dir):
+    """The store is partitioned ``gen=<g>/hb=<h>/`` and nothing deeper:
+    every parquet file of a save and of a compaction sits directly in an
+    hb dir two levels under data/."""
+    import os
 
     from dedup_spark.checkpoint import SignatureStore
 
-    cfg = RECALL_CONFIG.with_(cache_path=cache_dir)
-    s0 = SignatureStore(spark, cache_dir, cfg)
+    store = SignatureStore(spark, cache_dir, RECALL_CONFIG, compact_every=99)
+
+    def assert_one_level():
+        data = f"{cache_dir}/data"
+        leaves = {
+            os.path.relpath(root, data)
+            for root, _d, fs in os.walk(data)
+            if any(f.endswith(".parquet") for f in fs)
+        }
+        assert leaves
+        for leaf in leaves:
+            parts = leaf.split(os.sep)
+            assert len(parts) == 2, leaf
+            assert parts[0].startswith("gen=") and parts[1].startswith("hb="), leaf
+
+    rows = [("r", f"f{i}.py", "c", f"H{i}", [i], i, 1) for i in range(12)]
+    store.save(spark.createDataFrame(rows, SIG_SCHEMA))
+    store.save(spark.createDataFrame([("r", "g.py", "c", "HG", [1], 1, 1)], SIG_SCHEMA))
+    assert store.generations() == [0, 1]
+    assert_one_level()
+    store.compact()
+    assert store.generations() == [2]
+    assert_one_level()
+
+
+def test_two_level_store_raises_on_open(spark, cache_dir):
+    """A store whose generation still carries the old ``bucket=`` level
+    (``gen=0/bucket=*/hb=*``) is rejected with a ValueError naming the
+    store, before Spark's partition discovery sees the mixed depths."""
+    from dedup_spark.checkpoint import SignatureStore
+
+    store = SignatureStore(spark, cache_dir, RECALL_CONFIG)
     (
         spark.createDataFrame([("r", "a.py", "c", "H_A", [1], 1, 1)], SIG_SCHEMA)
-        .withColumn("bucket", s0._bucket())
-        .write.partitionBy("bucket")
+        .withColumn("gen0", F.lit(0))
+        .withColumn("genl", F.lit(0))
+        .withColumn("bucket", F.lit(3))
+        .withColumn("hb", store._hb())
+        .write.partitionBy("bucket", "hb")
         .parquet(f"{cache_dir}/data/gen=0")
     )
-    v2 = (
-        spark.createDataFrame([("r", "b.py", "c", "H_B", [2], 2, 1)], SIG_SCHEMA)
-        .withColumn("gen0", F.lit(1))
-        .withColumn("genl", F.lit(1))
-    )
-    s0._writer(v2).parquet(f"{cache_dir}/data/gen=1")
+    new_gen = spark.createDataFrame(
+        [("r", "b.py", "c", "H_B", [2], 2, 1)], SIG_SCHEMA
+    ).withColumn("gen0", F.lit(1)).withColumn("genl", F.lit(1))
+    store._writer(new_gen).parquet(f"{cache_dir}/data/gen=1")
 
-    store = SignatureStore(spark, cache_dir, cfg)
-    assert store.generations() == [1, 2]  # legacy gen 0 re-published as 2
-    got = {r["path"]: r["hash"] for r in store.load().collect()}
-    assert got == {"a.py": "H_A", "b.py": "H_B"}
-    probed = {
-        r["hash"]: r["first_path"]
-        for r in store.probe_hashes(["H_A", "H_B"]).collect()
-    }
-    assert probed == {"H_A": "a.py", "H_B": "b.py"}
+    for call in (
+        lambda s: s.load(),
+        lambda s: s.probe_hashes(["H_A"]),
+        lambda s: s.save(spark.createDataFrame([], SIG_SCHEMA)),
+    ):
+        with pytest.raises(ValueError, match=re.escape(cache_dir) + ".*delete it"):
+            call(SignatureStore(spark, cache_dir, RECALL_CONFIG))
 
 
 def test_store_algorithm_mismatch_raises(spark, cache_dir):
