@@ -50,7 +50,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from dedup_spark.config import DedupConfig  # noqa: E402
 from dedup_spark.operators.actions import build_plan  # noqa: E402
 from dedup_spark.operators.compare import cross_source_duplicates, missing_in_target  # noqa: E402
-from dedup_spark.operators.exact import exact_clusters  # noqa: E402
+from dedup_spark.operators.exact import exact_clusters, with_exact_rep  # noqa: E402
 from dedup_spark.operators.select import select_kept  # noqa: E402
 from dedup_spark.plans.pipeline import DedupPipeline  # noqa: E402
 from dedup_spark.queries import CFG_NOSIZE, tokenset_hash  # noqa: E402
@@ -89,19 +89,8 @@ def run_stages(pipe: DedupPipeline, cfg: DedupConfig, files,
 
     def _sigs():
         nonlocal sigs, reps
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("hash").orderBy("file_id")
-        sigs = (
-            pipe.signatures(files)
-            .drop("content")
-            .withColumn("_rn", F.row_number().over(w))
-            .withColumn("exact_rep", F.first("file_id").over(w))
-            .localCheckpoint()
-        )
-        reps = (
-            sigs.filter(F.col("_rn") == 1).drop("_rn", "exact_rep").localCheckpoint()
-        )
+        sigs = with_exact_rep(pipe.signatures(files).drop("content")).localCheckpoint()
+        reps = pipe.representatives(sigs).localCheckpoint()
         sigs.count()
 
     timed("signatures", _sigs)
@@ -120,7 +109,7 @@ def run_stages(pipe: DedupPipeline, cfg: DedupConfig, files,
             cands, reps, content_df=files.select("file_id", "content")
         )
         clusters = pipe.cluster(
-            sigs.drop("_rn", "minhash", "simhash", "n_shingles"), verified
+            sigs.drop("minhash", "simhash", "n_shingles"), verified
         )
         clusters.agg(F.countDistinct("cluster_id"), F.max("cluster_size")).collect()
 

@@ -67,6 +67,7 @@ import json, sys, time
 sys.path.insert(0, "/root/repo")
 from pyspark.sql import functions as F
 from dedup_spark.config import DedupConfig
+from dedup_spark.operators.exact import with_exact_rep
 from dedup_spark.plans.pipeline import DedupPipeline
 from dedup_spark.session import get_spark
 from dedup_spark.sources.loader import prepare_code_files
@@ -92,29 +93,22 @@ files = prepare_code_files(synth_code_corpus(spark, n, partitions=64), cfg).loca
 files.count()  # input materialization == the table scan, symmetric across levels
 
 def trial():
-    # minimal action count: ONE checkpoint (the fused hash-window sigs
-    # frame feeds candidates AND cluster assembly; reps is a free
-    # filter of it) — every extra action pays serial Catalyst planning
-    # + scheduling latency that Amdahl charges against E.
-    from pyspark.sql.window import Window
+    # minimal action count: ONE checkpoint (the hash-window sigs frame
+    # feeds candidates AND cluster assembly; reps is a free filter of
+    # it) — every extra action pays serial Catalyst planning +
+    # scheduling latency that Amdahl charges against E.
     stages = {}
     t_all = time.perf_counter()
     t0 = time.perf_counter()
-    w = Window.partitionBy("hash").orderBy("file_id")
-    sigs = (
-        pipe.signatures(files).drop("content")
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn("exact_rep", F.first("file_id").over(w))
-        .localCheckpoint()
-    )
+    sigs = with_exact_rep(pipe.signatures(files).drop("content")).localCheckpoint()
     # reps re-materialized: its ~6 consumers must hit small blocks
-    reps = sigs.filter(F.col("_rn") == 1).drop("_rn", "exact_rep").localCheckpoint()
+    reps = pipe.representatives(sigs).localCheckpoint()
     stages["signatures"] = time.perf_counter() - t0
     t0 = time.perf_counter()
     cands = pipe.candidates(reps)
     verified = pipe.verify(cands, reps, content_df=files.select("file_id", "content"))
     clusters = pipe.cluster(
-        sigs.drop("_rn", "minhash", "simhash", "n_shingles"), verified
+        sigs.drop("minhash", "simhash", "n_shingles"), verified
     ).localCheckpoint()
     n_clusters = clusters.agg(F.countDistinct("cluster_id")).first()[0]
     stages["cand_verify_cluster"] = time.perf_counter() - t0

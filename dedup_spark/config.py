@@ -68,17 +68,14 @@ class DedupConfig:
 
     # --- verification ---
     similarity_threshold: float = 0.9  # reference --media-similarity 90/100
-    verify_with_content: bool = True   # token-jaccard / LCS verification pass
     containment_threshold: float = 0.9  # LCS/min-len for containment pairs
 
     # --- clustering ---
-    cc_max_iterations: int = 20
-    # Edge sets at or below this collapse in ONE union-find task
-    # (operators/cc.py) instead of ~5 driver-round star iterations;
-    # larger graphs use the log-round star loop. 1M edges ≈ seconds in
-    # one task and well inside executor memory; the threshold is the
-    # serial-latency vs single-task-size trade.
-    cc_smallgraph_threshold: int = 1_000_000
+    # NOTE: no clustering knobs. Exact duplicates collapse to their
+    # min-id representative and representatives relabel by connected
+    # components (operators/cc.py: union-find up to
+    # SMALLGRAPH_THRESHOLD edges, star rounds above it, capped at
+    # MAX_STAR_ROUNDS); the CC lineage cuts follow checkpoint_mode.
 
     # --- selection / actions ---
     keep_strategy: str = "shortest_path"

@@ -27,10 +27,19 @@ executor-loss resumability — north_rule "resumable from checkpoint").
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dedup_spark.config import DedupConfig
+
+#: Edge sets at or below this size collapse in ONE union-find task
+#: instead of ~5 driver-round star iterations; larger graphs take the
+#: log-round star loop. 1M edges is seconds in one task and well inside
+#: executor memory — the serial-latency vs single-task-size trade.
+SMALLGRAPH_THRESHOLD = 1_000_000
+#: Star rounds converge in O(log n); a graph still moving after this
+#: many rounds raises instead of returning labels that split components.
+MAX_STAR_ROUNDS = 20
 
 
 def _checksum(edges: DataFrame) -> tuple[int, int]:
@@ -79,7 +88,7 @@ def _union_find_cc(edges: DataFrame) -> DataFrame:
     Why it exists: each star round costs one driver round-trip + one
     shuffle of a tiny frame — pure Amdahl serial time that the N→4N
     efficiency criterion charges at BOTH cluster sizes. Below the
-    threshold (see ``connected_components``), one task finishing in
+    ``SMALLGRAPH_THRESHOLD`` edges, one task finishing in
     O(E α(E)) replaces ~5 rounds of cluster-wide latency; above it,
     the log-round star loop is the only thing that scales.
     """
@@ -118,45 +127,75 @@ def _union_find_cc(edges: DataFrame) -> DataFrame:
     return edges.coalesce(1).mapInPandas(uf, "node long, cluster_id long")
 
 
-def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iterations: int = 20,
-    config: DedupConfig | None = None,
-) -> DataFrame:
-    """(node, cluster_id) for every node appearing in ``pairs``; the
-    cluster id is the component's minimum node id (deterministic labels,
-    SURVEY §7.3).
+def connected_components(pairs: DataFrame, config: DedupConfig | None = None) -> DataFrame:
+    """(node, cluster_id) for every node appearing in ``pairs`` (id_a,
+    id_b); the cluster id is the component's minimum node id
+    (deterministic labels, SURVEY §7.3). ``pairs`` may be a multiset:
+    edges are deduplicated here, once.
 
     Two physical strategies behind one contract:
-    - edge count ≤ ``config.cc_smallgraph_threshold`` → single-task
-      union-find (``_union_find_cc``) — zero iteration rounds;
+    - edge count ≤ ``SMALLGRAPH_THRESHOLD`` → single-task union-find
+      (``_union_find_cc``) — zero iteration rounds;
     - larger → alternating large/small-star rounds (scales to graphs
-      no single task can hold). The count needed for the decision
-      comes from the convergence checksum's first job — no extra
-      action.
+      no single task can hold), at most ``MAX_STAR_ROUNDS`` of them.
+      The count needed for the decision comes from the convergence
+      checksum's first job — no extra action.
     """
     from dedup_spark.checkpoint import lineage_cut
 
     cfg = config or DedupConfig()
     edges = lineage_cut(
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct(),
         cfg,
         eager=False,
     )
     prev = _checksum(edges)  # materializes the cut in the same job
-    if prev[0] <= cfg.cc_smallgraph_threshold:
+    if prev[0] <= SMALLGRAPH_THRESHOLD:
         return _union_find_cc(edges)
-    for _ in range(max_iterations):
+    for _ in range(MAX_STAR_ROUNDS):
         edges = lineage_cut(_small_star(_large_star(edges)), cfg, eager=False)
         cur = _checksum(edges)
         if cur == prev:
             break
         prev = cur
+    else:
+        raise RuntimeError(
+            f"connected components did not converge in {MAX_STAR_ROUNDS} star rounds"
+        )
     # converged star edges: u -> root(v). Roots map to themselves.
     members = edges.select(F.col("u").alias("node"), F.col("v").alias("cluster_id"))
     roots = edges.select(F.col("v").alias("node"), F.col("v").alias("cluster_id")).distinct()
     return members.union(roots).groupBy("node").agg(F.min("cluster_id").alias("cluster_id"))
+
+
+def label_clusters(
+    rows: DataFrame,
+    edges: DataFrame,
+    id_col: str,
+    rep_col: str | None = None,
+    config: DedupConfig | None = None,
+) -> DataFrame:
+    """``rows`` + ``cluster_id`` + ``cluster_size``: the one clustering
+    rule every modality shares. Each row carries its exact
+    representative in ``rep_col`` (default ``id_col``: every row
+    represents itself); representatives are relabeled by connected
+    components over ``edges`` (id_a, id_b), and a representative on no
+    edge keeps its own id. ``cluster_size`` counts every row, exact
+    duplicates included.
+
+    The component frame scales with the near-dup population
+    (corpus-order on a dup-heavy corpus), so the label join is pinned
+    to sort-merge: a small-size misestimate must never broadcast it
+    (see verify.attach_pair_signatures)."""
+    rep = rep_col or id_col
+    comp = connected_components(edges, config).withColumnsRenamed(
+        {"node": rep, "cluster_id": "_component"}
+    )
+    labeled = rows.join(comp.hint("merge"), rep, "left").select(
+        *rows.columns, F.coalesce("_component", rep).alias("cluster_id")
+    )
+    return labeled.withColumn(
+        "cluster_size", F.count(F.lit(1)).over(Window.partitionBy("cluster_id"))
+    )

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -27,6 +28,31 @@ from pyspark.sql import functions as F
 CDC_CHUNK_SCHEMA = (
     "file_id long, chunk_idx long, n_tokens long, chunk_hash long"
 )
+
+
+def chunk_batch(ids: pd.Series, texts: pd.Series, modulus: int = 16) -> pd.DataFrame:
+    """One batch of the chunk inventory (``CDC_CHUNK_SCHEMA`` columns),
+    assembled column-wise from the per-doc kernel outputs — no per-chunk
+    Python loop."""
+    from dedup_spark.functions.shingles import cdc_chunk_hashes
+
+    per_doc = [cdc_chunk_hashes(text or "", modulus) for text in texts]
+    counts = np.array([h.shape[0] for h, _ in per_doc], dtype=np.int64)
+    # chunk_idx restarts at 0 per doc: global position minus the doc's
+    # first row
+    first = np.repeat(np.cumsum(counts) - counts, counts)
+    return pd.DataFrame(
+        {
+            "file_id": np.repeat(ids.to_numpy(dtype=np.int64), counts),
+            "chunk_idx": np.arange(int(counts.sum()), dtype=np.int64) - first,
+            "n_tokens": np.concatenate(
+                [n_tok for _, n_tok in per_doc] + [np.empty(0, np.int64)]
+            ),
+            "chunk_hash": np.concatenate(
+                [h for h, _ in per_doc] + [np.empty(0, np.uint64)]
+            ).view(np.int64),
+        }
+    )
 
 
 def cdc_chunks(
@@ -41,21 +67,8 @@ def cdc_chunks(
     documents yield no rows. Arrow-batched; one kernel pass per doc."""
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from dedup_spark.functions.shingles import cdc_chunk_hashes
-
         for pdf in batches:
-            ids, idxs, lens, hashes = [], [], [], []
-            for fid, text in zip(pdf[id_col], pdf[content_col]):
-                h, n_tok = cdc_chunk_hashes(text or "", modulus)
-                for k in range(h.shape[0]):
-                    ids.append(int(fid))
-                    idxs.append(k)
-                    lens.append(int(n_tok[k]))
-                    hashes.append(int(h[k].astype("int64")))
-            yield pd.DataFrame(
-                {"file_id": ids, "chunk_idx": idxs,
-                 "n_tokens": lens, "chunk_hash": hashes}
-            )
+            yield chunk_batch(pdf[id_col], pdf[content_col], modulus)
 
     return df.select(id_col, content_col).mapInPandas(_run, CDC_CHUNK_SCHEMA)
 

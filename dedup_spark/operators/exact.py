@@ -29,6 +29,15 @@ def with_content_hash(df: DataFrame, config: DedupConfig, out_col: str = "hash")
     return df.withColumn(out_col, content_hash("content", config.algorithm))
 
 
+def with_exact_rep(
+    df: DataFrame, key_col: str = "hash", id_col: str = "file_id", out_col: str = "exact_rep"
+) -> DataFrame:
+    """Append ``out_col`` = min(``id_col``) over the rows sharing
+    ``key_col``: the exact representative every clustering path starts
+    from (text, media and the exact stage alike)."""
+    return df.withColumn(out_col, F.min(id_col).over(Window.partitionBy(key_col)))
+
+
 def size_prefilter(df: DataFrame, size_col: str = "size") -> DataFrame:
     """A1+F4: keep only rows whose size occurs more than once.
 
@@ -59,9 +68,8 @@ def exact_clusters(
     hashed = df if hash_col in df.columns else with_content_hash(df, config, hash_col)
     if config.size_prefilter and min_cluster_size > 1:
         hashed = size_prefilter(hashed)
-    w = Window.partitionBy(hash_col)
-    out = hashed.withColumn("cluster_id", F.min("file_id").over(w)).withColumn(
-        "cluster_size", F.count(F.lit(1)).over(w)
+    out = with_exact_rep(hashed, hash_col, out_col="cluster_id").withColumn(
+        "cluster_size", F.count(F.lit(1)).over(Window.partitionBy(hash_col))
     )
     if min_cluster_size > 1:
         out = out.filter(F.col("cluster_size") >= min_cluster_size)

@@ -5,8 +5,9 @@ The reference compares all same-kind pairs in a nested loop
 The standard LSH rewrite (north_rule): split each n-element MinHash
 signature into b bands of r rows, hash each band, and only documents
 colliding on (band_id, band_hash) become candidate pairs. At the default
-b=16, r=8: P(candidate | J=0.9) = 1-(1-0.9^8)^16 ≈ 0.9999 — comfortably
-above the 0.99 recall target at the 0.9 threshold.
+b=32, r=4: P(candidate | J=0.9) = 1-(1-0.9^4)^32 ≈ 1 - 10^-15, and
+P(candidate | J=0.7) = 1-(1-0.7^4)^32 ≈ 0.9998, so containment pairs
+(J ≈ 0.7) still reach verification — well above the 0.99 recall target.
 
 Scale/skew posture:
 - band hashing is JVM-side (``F.hash`` over array slices inside
@@ -18,8 +19,10 @@ Scale/skew posture:
   runs first and collapses identical contents to one representative, so
   a mega-bucket of N identical files never reaches LSH in the first
   place.
-- residual skew in the pair-dedup shuffle is left to AQE skew handling
-  (enabled in session.py).
+- pairs leave here raw: near-identical docs collide in most bands, and
+  the one dedup of the candidate multiset runs at the LSH ∪ SimHash
+  union (``DedupPipeline.candidates``); residual skew in that shuffle
+  is left to AQE skew handling (enabled in session.py).
 """
 
 from __future__ import annotations
@@ -54,7 +57,6 @@ def pairs_from_keys(
     key_cols: list[str],
     cap: int,
     id_col: str = "file_id",
-    dedupe: bool = True,
 ) -> DataFrame:
     """Generic bucket→pairs expansion (bucket form, mirroring
     ``simhash_join.simhash_candidate_pairs``'s physical shape).
@@ -72,22 +74,17 @@ def pairs_from_keys(
     One groupBy collects each bucket's ids (bounded: buckets above
     ``cap`` are dropped — counted by ``oversize_buckets`` upstream,
     never silent); pairs are generated JVM-side by a double explode
-    with ``a < b``. Distinct unless the caller dedupes downstream.
+    with ``a < b``. A pair sharing several buckets is emitted once per
+    bucket; callers dedupe.
     """
     buckets = keys.groupBy(*key_cols).agg(F.collect_list(id_col).alias("ids"))
     ok = buckets.filter((F.size("ids") >= 2) & (F.size("ids") <= cap))
-    pairs = (
+    return (
         ok.select(F.explode("ids").alias("id_a"), F.col("ids"))
         .select("id_a", F.explode("ids").alias("id_b"))
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
     )
-    # callers that union several candidate sources dedupe ONCE,
-    # downstream of the cheap verify prune (dedupe=False) — near-
-    # identical docs collide in most bands, so an inner distinct here
-    # would shuffle the same inflated pair set again for nothing, and
-    # the post-prune set is far smaller.
-    return pairs.distinct() if dedupe else pairs
 
 
 def oversize_buckets(keys: DataFrame, key_cols: list[str], cap: int, id_col: str = "file_id") -> DataFrame:
@@ -100,11 +97,9 @@ def oversize_buckets(keys: DataFrame, key_cols: list[str], cap: int, id_col: str
 
 
 def lsh_candidate_pairs(
-    sig_df: DataFrame, config: DedupConfig, id_col: str = "file_id", dedupe: bool = True
+    sig_df: DataFrame, config: DedupConfig, id_col: str = "file_id"
 ) -> DataFrame:
-    """MinHash-LSH candidate pairs: (id_a, id_b), distinct unless the
-    caller dedupes at a downstream union."""
+    """MinHash-LSH candidate pairs: raw (id_a, id_b), one row per shared
+    band bucket."""
     keys = band_keys(sig_df, config, id_col)
-    return pairs_from_keys(
-        keys, ["band_id", "band_hash"], config.band_bucket_cap, id_col, dedupe=dedupe
-    )
+    return pairs_from_keys(keys, ["band_id", "band_hash"], config.band_bucket_cap, id_col)

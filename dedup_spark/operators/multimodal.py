@@ -869,10 +869,9 @@ def _signature_near_dup_clusters(
     ``precut=True`` promises the caller already lineage_cut ``sigs``
     (so an orchestrator that also consumes the frame elsewhere shares
     ONE materialization of the decode+fingerprint stage)."""
-    from pyspark.sql import Window
-
     from dedup_spark.checkpoint import lineage_cut
-    from dedup_spark.operators.cc import connected_components
+    from dedup_spark.operators.cc import label_clusters
+    from dedup_spark.operators.exact import with_exact_rep
     from dedup_spark.operators.simhash_join import simhash_candidate_pairs
 
     # the signature frame feeds BOTH the candidate join and the final
@@ -885,40 +884,18 @@ def _signature_near_dup_clusters(
     # media corpus carries one asset verbatim millions of times, and
     # without this every copy lands in the same block-pair buckets,
     # the 512-member cap drops the excess (counted, but recall-lossy
-    # for the dropped members). One 16-byte groupBy replaces the mass
-    # with its min-id representative in the join; members rejoin
-    # through the rep's label, so identical-signature clustering is
-    # exact at ANY multiplicity and the Hamming join's bucket load is
-    # bounded by the number of DISTINCT signatures. Found by
-    # scripts/media_scale_probe.py's mass-duplicate variant (recall
-    # 1/3 at 60k assets without the collapse; 1.0 with it).
-    reps = sigs.groupBy(sig_col).agg(F.min("asset_id").alias("asset_id"))
-    pairs = simhash_candidate_pairs(
-        reps.withColumnRenamed(sig_col, "simhash"), cfg, id_col="asset_id"
-    ).select("id_a", "id_b")
-    comp = connected_components(pairs, config=cfg)
-    # both attach joins have corpus-sized build candidates at 10^12
-    # (reps ≈ distinct signatures, comp ≈ clustered reps) — pin
-    # sort-merge exactly like the text pipeline's label joins, where
-    # AQE's under-threshold size estimate for checkpoint-derived
-    # frames chose a fatal corpus-side broadcast at 1.6M files
-    # (round-4 fix, pipeline.py:182)
-    rep_label = (
-        reps.withColumnRenamed("asset_id", "_rep_id")
-        .join(
-            comp.withColumnRenamed("node", "_rep_id").hint("merge"),
-            "_rep_id",
-            "left",
-        )
-        .withColumn("cluster_id", F.coalesce("cluster_id", F.col("_rep_id")))
-        .select(sig_col, "cluster_id")
+    # for the dropped members). Only min-id representatives enter the
+    # join; members take their rep's label, so identical-signature
+    # clustering is exact at ANY multiplicity and the Hamming join's
+    # bucket load is bounded by the number of DISTINCT signatures.
+    # Found by scripts/media_scale_probe.py's mass-duplicate variant
+    # (recall 1/3 at 60k assets without the collapse; 1.0 with it).
+    rows = with_exact_rep(sigs, sig_col, "asset_id")
+    reps = rows.filter(F.col("asset_id") == F.col("exact_rep")).select(
+        "asset_id", F.col(sig_col).alias("simhash")
     )
-    labeled = sigs.join(rep_label.hint("merge"), sig_col, "left").withColumn(
-        "cluster_id", F.coalesce("cluster_id", F.col("asset_id"))
-    )
-    return labeled.withColumn(
-        "cluster_size", F.count(F.lit(1)).over(Window.partitionBy("cluster_id"))
-    )
+    pairs = simhash_candidate_pairs(reps, cfg, id_col="asset_id").select("id_a", "id_b")
+    return label_clusters(rows, pairs, "asset_id", "exact_rep", cfg).drop("exact_rep")
 
 
 def image_near_dup_clusters(

@@ -72,10 +72,10 @@ def simhash_candidate_pairs(
     sig_df: DataFrame,
     config: DedupConfig,
     id_col: str = "file_id",
-    dedupe: bool = True,
 ) -> DataFrame:
-    """(id_a, id_b, hamming) pairs within the Hamming radius — distinct
-    unless the caller dedupes at a downstream union (``dedupe=False``).
+    """(id_a, id_b, hamming) pairs within the Hamming radius — raw: a
+    pair agreeing on several block-pair keys is emitted once per key;
+    callers dedupe.
 
     Self-join on block-pair keys (exact recall by pigeonhole — see
     ``simhash_blockpair_keys``); hot key values above
@@ -117,7 +117,7 @@ def simhash_candidate_pairs(
     ok = buckets.filter(
         (F.size("members") >= 2) & (F.size("members") <= config.band_bucket_cap)
     )
-    out = (
+    return (
         ok.select(F.explode("members").alias("a"), "members")
         .select("a", F.explode("members").alias("b"))
         .filter(F.col("a.id") < F.col("b.id"))
@@ -127,4 +127,3 @@ def simhash_candidate_pairs(
             F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"), "hamming"
         )
     )
-    return out.distinct() if dedupe else out

@@ -105,16 +105,15 @@ def verify_pairs(
     sig_df: DataFrame,
     config: DedupConfig,
     id_col: str = "file_id",
-    with_content: bool | None = None,
     content_df: DataFrame | None = None,
 ) -> DataFrame:
-    """Score candidate pairs and keep those passing the similarity gate.
+    """Score distinct candidate pairs (``DedupPipeline.candidates``
+    output) and keep those passing the similarity gate.
 
-    Output: (id_a, id_b, est_jaccard, hamming, [jaccard, containment],
-    sim) — ``sim`` is the decision score: exact Jaccard when content
-    verification ran, else the MinHash estimate. A pair passes when
-    ``sim >= similarity_threshold`` OR (containment pass)
-    ``containment >= containment_threshold``.
+    Output: (id_a, id_b, est_jaccard, hamming, jaccard, containment,
+    sim) — ``sim`` is the decision score, the exact shingle Jaccard. A
+    pair passes when ``sim >= similarity_threshold`` OR (containment
+    pass) ``containment >= containment_threshold``.
 
     ``content_df`` (id_col, content) lets callers keep ``content`` OUT
     of the signature frame (and out of every window/checkpoint
@@ -124,8 +123,6 @@ def verify_pairs(
     pipeline and shuffling ~the candidate set's. Defaults to ``sig_df``
     (which then must carry ``content``).
     """
-    if with_content is None:
-        with_content = config.verify_with_content
     joined = attach_pair_signatures(pairs, sig_df, ["minhash", "simhash"], id_col)
     scored = joined.withColumn(
         "est_jaccard",
@@ -143,43 +140,27 @@ def verify_pairs(
     plausible = (F.col("est_jaccard") >= F.lit(floor)) | (
         F.col("hamming") <= F.lit(config.simhash_radius + 8)
     )
-    # Idempotence guard: verify accepts a pair MULTISET (callers that
-    # skip candidates()' union distinct, e.g. per-source metrics) and
-    # still emits each pair once. Every scored column is a
-    # deterministic function of the pair, so key-only dropDuplicates
-    # is exact; on the normal pre-deduped path this is a ~n_verified
-    # narrow shuffle (trivial). NOTE the main dedup deliberately does
-    # NOT live here: the tier-1/2 prune above consumes est_jaccard/
-    # hamming, so any multiset reaching this point already paid the
-    # wide signature-attach joins per duplicate row — see
-    # DedupPipeline.candidates for the A/B that pinned dedup at the
-    # union. Signature arrays are dropped first — this exchange moves
-    # ~32-byte rows, not 128-int minhash payloads.
-    scored = (
-        scored.filter(plausible)
-        .drop("minhash_a", "minhash_b", "simhash_a", "simhash_b")
-        .dropDuplicates(["id_a", "id_b"])
+    # signature arrays are dropped before the content join — only
+    # ~32-byte score rows ride into it, not 128-int minhash payloads
+    scored = scored.filter(plausible).drop(
+        "minhash_a", "minhash_b", "simhash_a", "simhash_b"
     )
-    if with_content:
-        src = content_df if content_df is not None else sig_df
-        scored = attach_pair_signatures(scored, src, ["content"], id_col)
-        # The content pass is CPU-bound Python at ~KB-sized rows: AQE's
-        # size-based coalescing would funnel it into 1-2 partitions and
-        # serialize the UDF — spread it across the cores explicitly.
-        par = pairs.sparkSession.sparkContext.defaultParallelism
-        scored = scored.repartition(par * 2)
-        vudf = make_content_verify_udf(config)
-        scored = (
-            scored.withColumn("_v", vudf(F.col("content_a"), F.col("content_b")))
-            .withColumn("jaccard", F.col("_v.jaccard"))
-            .withColumn("containment", F.col("_v.containment"))
-            .drop("_v", "content_a", "content_b")
-            .withColumn("sim", F.col("jaccard"))
-        )
-        passed = (F.col("sim") >= F.lit(config.similarity_threshold)) | (
-            F.col("containment") >= F.lit(config.containment_threshold)
-        )
-    else:
-        scored = scored.withColumn("sim", F.col("est_jaccard"))
-        passed = F.col("sim") >= F.lit(config.similarity_threshold)
+    src = content_df if content_df is not None else sig_df
+    scored = attach_pair_signatures(scored, src, ["content"], id_col)
+    # The content pass is CPU-bound Python at ~KB-sized rows: AQE's
+    # size-based coalescing would funnel it into 1-2 partitions and
+    # serialize the UDF — spread it across the cores explicitly.
+    par = pairs.sparkSession.sparkContext.defaultParallelism
+    scored = scored.repartition(par * 2)
+    vudf = make_content_verify_udf(config)
+    scored = (
+        scored.withColumn("_v", vudf(F.col("content_a"), F.col("content_b")))
+        .withColumn("jaccard", F.col("_v.jaccard"))
+        .withColumn("containment", F.col("_v.containment"))
+        .drop("_v", "content_a", "content_b")
+        .withColumn("sim", F.col("jaccard"))
+    )
+    passed = (F.col("sim") >= F.lit(config.similarity_threshold)) | (
+        F.col("containment") >= F.lit(config.containment_threshold)
+    )
     return scored.filter(passed)

@@ -18,13 +18,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from dedup_spark.checkpoint import SignatureStore, lineage_cut
 from dedup_spark.config import DedupConfig
 from dedup_spark.functions.signatures import with_signatures
-from dedup_spark.operators.cc import connected_components
-from dedup_spark.operators.exact import with_content_hash
+from dedup_spark.operators.cc import label_clusters
+from dedup_spark.operators.exact import with_content_hash, with_exact_rep
 from dedup_spark.operators.lsh import lsh_candidate_pairs
 from dedup_spark.operators.report import duplicate_report
 from dedup_spark.operators.select import select_kept
@@ -67,10 +66,18 @@ class DedupPipeline:
         sigs = hits.unionByName(fresh)
         return sigs
 
+    @staticmethod
+    def _with_rep(sigs: DataFrame) -> DataFrame:
+        """``sigs`` with ``exact_rep``, reusing a caller-supplied one."""
+        return sigs if "exact_rep" in sigs.columns else with_exact_rep(sigs)
+
     def representatives(self, sigs: DataFrame) -> DataFrame:
         """One row per distinct content hash (min file_id wins)."""
-        w = Window.partitionBy("hash").orderBy("file_id")
-        return sigs.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop("_rn")
+        return (
+            self._with_rep(sigs)
+            .filter(F.col("file_id") == F.col("exact_rep"))
+            .drop("exact_rep")
+        )
 
     def candidates(self, reps: DataFrame, dedupe: bool = True) -> DataFrame:
         """LSH ∪ SimHash candidate pairs over representatives, deduped
@@ -87,21 +94,22 @@ class DedupPipeline:
         two wide signature-attach joins instead of one narrow
         distinct. A/B at local[8]/400k: dedup-first 34-39s vs
         dedup-after-prune 47-54s for candidates+verify, identical
-        output (bit-identity test in test_candidates.py). At 10^12
-        files the narrow shuffle is ~35 GB where the attached multiset
-        would be ~2 TB.
+        output. At 10^12 files the narrow shuffle is ~35 GB where the
+        attached multiset would be ~2 TB.
 
         ``dedupe=False`` exposes the raw multiset (tests, collision
-        metrics). With ``same_lang_only`` the F7 gate drops cross-lang
-        pairs (reference: cross-kind similarity is 0,
+        metrics); it is the only multiset of pairs the pipeline builds,
+        and ``verify`` expects the distinct set. With
+        ``same_lang_only`` the F7 gate drops cross-lang pairs
+        (reference: cross-kind similarity is 0,
         /root/reference/src/media_dedup.rs:392-418)."""
-        mh = lsh_candidate_pairs(reps, self.config, dedupe=False)
+        mh = lsh_candidate_pairs(reps, self.config)
         # simhash pairs arrive hamming-verified INSIDE the join stage
         # (false block-pair collisions die in codegen, never shuffled —
         # see simhash_candidate_pairs); the union's distinct is the
         # only pair shuffle for both sources
         pairs = mh.union(
-            simhash_candidate_pairs(reps, self.config, dedupe=False).select("id_a", "id_b")
+            simhash_candidate_pairs(reps, self.config).select("id_a", "id_b")
         )
         if dedupe:
             pairs = pairs.distinct()
@@ -163,27 +171,12 @@ class DedupPipeline:
         component label of the representative (defaults to the
         representative itself — singleton or exact-only cluster).
 
-        When ``sigs`` already carries ``exact_rep`` (run()'s fused
-        hash-window), the per-hash shuffle here is skipped entirely.
+        When ``sigs`` already carries ``exact_rep`` (run()'s hash
+        window), the per-hash shuffle here is skipped entirely.
         """
-        if "exact_rep" in sigs.columns:
-            with_rep = sigs
-        else:
-            w = Window.partitionBy("hash")
-            with_rep = sigs.withColumn("exact_rep", F.min("file_id").over(w))
-        comp = connected_components(
-            verified_pairs,
-            max_iterations=self.config.cc_max_iterations,
-            config=self.config,
-        ).withColumnsRenamed({"node": "exact_rep", "cluster_id": "fuzzy_label"})
-        # comp scales with the near-dup population (corpus-order on a
-        # dup-heavy corpus) — never let a small-size misestimate
-        # broadcast it (see attach_pair_signatures)
-        out = with_rep.join(comp.hint("merge"), "exact_rep", "left").withColumn(
-            "cluster_id", F.coalesce("fuzzy_label", "exact_rep")
-        ).drop("fuzzy_label")
-        cw = Window.partitionBy("cluster_id")
-        return out.withColumn("cluster_size", F.count(F.lit(1)).over(cw))
+        return label_clusters(
+            self._with_rep(sigs), verified_pairs, "file_id", "exact_rep", self.config
+        )
 
     # ---- end-to-end ---------------------------------------------------
     def run(self, source: str | DataFrame, min_cluster_size: int = 1) -> DataFrame:
@@ -207,33 +200,23 @@ class DedupPipeline:
         # feeds the candidate joins AND the final cluster assembly —
         # without a cut, Catalyst re-runs the signature UDF per branch.
         #
-        # Fused hash-window: ONE shuffle by hash yields both the
-        # representative rank (_rn=1 → one row per distinct content)
-        # and exact_rep (min file_id of the hash group, consumed by
-        # cluster()) — previously representatives() and cluster() each
-        # re-shuffled the full frame by hash. reps then derives from
-        # the cut frame by a free filter instead of a second
-        # checkpoint.
-        w = Window.partitionBy("hash").orderBy("file_id")
-        sigs = self._cut(
-            sigs.drop("content")
-            .withColumn("_rn", F.row_number().over(w))
-            .withColumn("exact_rep", F.first("file_id").over(w))
-        )
+        # ONE shuffle by hash yields exact_rep (min file_id of the hash
+        # group), consumed by both representatives() (file_id ==
+        # exact_rep → one row per distinct content) and cluster() —
+        # neither re-shuffles the full frame by hash.
+        sigs = self._cut(with_exact_rep(sigs.drop("content")))
         # reps is re-materialized even though it is "just a filter":
         # candidates + verify scan it ~6 times, and the filtered frame
         # is both smaller (distinct contents only) and the only carrier
         # of the heavy signature arrays — repeated consumers must hit
         # the small blocks, not re-scan the full frame's.
-        reps = self._cut(sigs.filter(F.col("_rn") == 1).drop("_rn", "exact_rep"))
+        reps = self._cut(self.representatives(sigs))
         pairs = self.candidates(reps)
         verified = self.verify(pairs, reps, content_df=files.select("file_id", "content"))
         # cluster assembly never touches the signature arrays — drop
         # them before the exact_rep join + cluster_size window so those
         # shuffles move ~150B rows, not 128-int minhash payloads
-        clusters = self.cluster(
-            sigs.drop("_rn", "minhash", "simhash", "n_shingles"), verified
-        )
+        clusters = self.cluster(sigs.drop("minhash", "simhash", "n_shingles"), verified)
         if min_cluster_size > 1:
             clusters = clusters.filter(F.col("cluster_size") >= min_cluster_size)
         return clusters

@@ -961,23 +961,12 @@ def q_embedding_near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame
     component; vectors with no near-dup partner are their own
     singleton cluster. Value-verified: recursive-closure CC oracle
     (same pattern as near_dup_clusters)."""
-    from pyspark.sql import Window
-
-    from dedup_spark.operators.cc import connected_components
+    from dedup_spark.operators.cc import label_clusters
     from dedup_spark.operators.similarity import cosine_near_dup_pairs
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     pairs = cosine_near_dup_pairs(emb, threshold=0.4)
-    cc = connected_components(pairs, "id_a", "id_b")
-    labeled = (
-        emb.select("vec_id")
-        .join(cc, emb["vec_id"] == cc["node"], "left")
-        .select("vec_id", F.coalesce("cluster_id", "vec_id").alias("cluster_id"))
-    )
-    return labeled.withColumn(
-        "cluster_size",
-        F.count(F.lit(1)).over(Window.partitionBy("cluster_id")).cast("long"),
-    ).orderBy("vec_id")
+    return label_clusters(emb.select("vec_id"), pairs, "vec_id").orderBy("vec_id")
 
 
 _STOPWORDS_SQL = "['the','and','of','to','in','is','a','for','on','with','as','at','by','it','or','be','this','that','are','an']"

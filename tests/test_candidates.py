@@ -53,7 +53,7 @@ def test_bucket_cap_drops_mega_bucket(spark):
     over = oversize_buckets(band_keys(df, cfg_small), ["band_id", "band_hash"], 10)
     assert over.count() == cfg_small.lsh_bands  # all 32 buckets flagged, not silent
     # with a roomy cap all C(40,2) pairs emerge
-    assert lsh_candidate_pairs(df, CFG).count() == 40 * 39 // 2
+    assert lsh_candidate_pairs(df, CFG).distinct().count() == 40 * 39 // 2
 
 
 def test_simhash_pairs_within_radius(spark):
@@ -127,11 +127,10 @@ def test_bucket_form_matches_reference_form(sig_df, cap):
 
 
 def test_pair_dedup_placement_bit_identical(spark):
-    """Verified pairs from the RAW candidate multiset (candidates with
-    dedupe=False — verify's post-prune key dedup must then absorb the
-    band-collision multiplicity) must be bit-identical to verifying
-    the normal pre-deduped candidate set: the dedup placement is a
-    pure physical choice, never a semantic one."""
+    """The candidate multiset is deduplicated exactly once, at the
+    LSH ∪ SimHash union: candidates() is the raw multiset's distinct
+    set, and verify over it emits each pair once — identical to
+    verifying the raw multiset's distinct set."""
     from dedup_spark.config import DedupConfig
     from dedup_spark.operators.verify import verify_pairs
     from dedup_spark.plans.pipeline import DedupPipeline
@@ -152,16 +151,18 @@ def test_pair_dedup_placement_bit_identical(spark):
     reps = pipe.representatives(sigs)
     raw = pipe.candidates(reps, dedupe=False)
     assert raw.count() > raw.distinct().count()  # the multiset is real
+    cands = pipe.candidates(reps)
+    assert sorted(cands.collect()) == sorted(raw.distinct().collect())
     content = df.select("file_id", "content")
 
     def key(r):
         return (r["id_a"], r["id_b"], round(r["sim"], 9), round(r["est_jaccard"], 9), r["hamming"])
 
-    v_raw = sorted(key(r) for r in verify_pairs(raw, reps, cfg, content_df=content).collect())
+    v_cands = sorted(key(r) for r in verify_pairs(cands, reps, cfg, content_df=content).collect())
     v_pre = sorted(
         key(r) for r in verify_pairs(raw.distinct(), reps, cfg, content_df=content).collect()
     )
-    assert v_raw == v_pre and len(v_raw) == len({(a, b) for a, b, *_ in v_raw})
+    assert v_cands == v_pre and len(v_cands) == len({(a, b) for a, b, *_ in v_cands})
 
 
 def test_same_lang_gate(spark):
@@ -174,7 +175,7 @@ def test_same_lang_gate(spark):
         (3, "go", "def main return none for i in range len args print i x y z"),
     ]
     df = spark.createDataFrame(rows, "file_id long, lang string, content string")
-    base = DedupConfig(verify_with_content=False)
+    base = DedupConfig()
     pipe_open = DedupPipeline(spark, base)
     sigs = pipe_open.signatures(df.withColumn("content", df.content))
     open_pairs = {

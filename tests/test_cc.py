@@ -1,26 +1,35 @@
 """M6 connected components: chains, triangles, multiple components,
 deterministic min-id labels, convergence on long chains within the
-iteration budget. Every case runs through BOTH physical strategies —
-the single-task union-find (small graphs) and the large/small-star
-loop (forced via cc_smallgraph_threshold=0) — which must be
-bit-identical.
+round cap. Every case runs through BOTH physical strategies — the
+single-task union-find (small graphs) and the large/small-star loop
+(forced by patching cc.SMALLGRAPH_THRESHOLD to 0) — which must be
+bit-identical. label_clusters is the labeling step every modality
+shares on top of it.
 """
 
+from contextlib import contextmanager
+
 import pytest
-from pyspark.sql import functions as F
 
-from dedup_spark.config import DedupConfig
-from dedup_spark.operators.cc import connected_components
+from dedup_spark.operators import cc
+from dedup_spark.operators.cc import connected_components, label_clusters
 
-STAR_CFG = DedupConfig(cc_smallgraph_threshold=0)  # force the star loop
-UF_CFG = DedupConfig()  # small graphs take the union-find path
+UF, STAR = "union_find", "star_loop"
+CONFIGS = [pytest.param(UF, id=UF), pytest.param(STAR, id=STAR)]
 
-CONFIGS = [pytest.param(UF_CFG, id="union_find"), pytest.param(STAR_CFG, id="star_loop")]
+
+@contextmanager
+def _strategy(cfg):
+    with pytest.MonkeyPatch.context() as mp:
+        if cfg == STAR:
+            mp.setattr(cc, "SMALLGRAPH_THRESHOLD", 0)  # force the star loop
+        yield mp
 
 
 def _labels(spark, edges, cfg):
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    return {r["node"]: r["cluster_id"] for r in connected_components(df, config=cfg).collect()}
+    with _strategy(cfg):
+        return {r["node"]: r["cluster_id"] for r in connected_components(df).collect()}
 
 
 @pytest.mark.parametrize("cfg", CONFIGS)
@@ -82,7 +91,30 @@ def test_paths_bit_identical_on_random_graph(spark):
             edges += [(ids[0], x) for x in ids[1:]]
         else:  # ring + chord
             edges += [(a, b) for a, b in zip(ids, ids[1:])] + [(ids[-1], ids[0]), (ids[5], ids[20])]
-    uf = _labels(spark, edges, UF_CFG)
-    star = _labels(spark, edges, STAR_CFG)
+    uf = _labels(spark, edges, UF)
+    star = _labels(spark, edges, STAR)
     assert uf == star
     assert len({v for v in uf.values()}) == 100
+
+
+def test_star_loop_raises_at_round_cap(spark):
+    """A graph still moving at the round cap must fail loudly, never
+    return labels that split one component in two."""
+    df = spark.createDataFrame([(i, i + 1) for i in range(64)], "id_a long, id_b long")
+    with _strategy(STAR) as mp, pytest.raises(RuntimeError, match="did not converge"):
+        mp.setattr(cc, "MAX_STAR_ROUNDS", 1)
+        connected_components(df)
+
+
+@pytest.mark.parametrize("cfg", CONFIGS)
+def test_label_clusters_keeps_lone_reps_and_counts_members(spark, cfg):
+    # rows: (id, rep) — 1/2 are exact dups under rep 1, 3 sits under rep
+    # 3, 4 is a rep on no edge; the one edge joins reps 1 and 3
+    rows = spark.createDataFrame(
+        [(1, 1), (2, 1), (3, 3), (4, 4)], "id long, rep long"
+    )
+    edges = spark.createDataFrame([(1, 3)], "id_a long, id_b long")
+    with _strategy(cfg):
+        out = label_clusters(rows, edges, "id", "rep").collect()
+    got = {r["id"]: (r["rep"], r["cluster_id"], r["cluster_size"]) for r in out}
+    assert got == {1: (1, 1, 3), 2: (1, 1, 3), 3: (3, 1, 3), 4: (4, 4, 1)}

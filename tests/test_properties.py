@@ -161,6 +161,36 @@ def test_span_hashes_whitespace_run_invariant(tokens, window):
     assert np.array_equal(a, b)
 
 
+@SETTINGS
+@given(
+    st.lists(
+        st.one_of(
+            st.none(),
+            st.lists(st.text(alphabet="abcdef", min_size=1, max_size=4), max_size=60).map(" ".join),
+        ),
+        max_size=8,
+    ),
+    st.integers(min_value=1, max_value=8),
+)
+def test_cdc_chunk_batch_matches_per_chunk_loop(texts, modulus):
+    """The column-wise chunk inventory equals the per-chunk loop it
+    replaced, row for row (empty and null docs yield no rows)."""
+    import pandas as pd
+
+    from dedup_spark.functions.shingles import cdc_chunk_hashes
+    from dedup_spark.operators.cdc import chunk_batch
+
+    ids = [7 * i + 3 for i in range(len(texts))]
+    ref = []
+    for fid, text in zip(ids, texts):
+        h, n_tok = cdc_chunk_hashes(text or "", modulus)
+        for k in range(h.shape[0]):
+            ref.append((fid, k, int(n_tok[k]), int(h[k].astype("int64"))))
+    got = chunk_batch(pd.Series(ids, dtype="int64"), pd.Series(texts, dtype=object), modulus)
+    assert list(got.columns) == ["file_id", "chunk_idx", "n_tokens", "chunk_hash"]
+    assert [tuple(int(v) for v in row) for row in got.itertuples(index=False)] == ref
+
+
 # ---- PII redaction invariants (third-engine re proxy) ---------------------
 # The Spark/Java and DuckDB/RE2 engines are pinned equal by the
 # pii_redact value oracle; Python re is a third engine over the SAME
